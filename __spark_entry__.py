@@ -810,11 +810,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             committed = spark.read.parquet(out) \
                 .withColumn("bucket", bucket_of)
             n_in = docs.count()
-            n_out = committed.count()
+            n_out, n_keys = committed.agg(
+                F.count("*"), F.countDistinct("conv_id", "turn_idx")).first()
             if n_out != n_in:
                 raise RuntimeError(
                     f"restart broke exactly-once: {n_out} output turns vs "
                     f"{n_in} input (duplicates or loss across the resume)")
+            # key level: equal counts can still hide a duplicated turn
+            # paired with a lost one
+            if n_keys != n_in:
+                raise RuntimeError(
+                    f"restart broke exactly-once: {n_keys} distinct "
+                    f"(conv_id, turn_idx) keys in the output vs {n_in} "
+                    f"input turns (a turn duplicated and another lost)")
             ledger = (
                 committed.groupBy("bucket")
                 .agg(F.count("*").alias("n_turns"),

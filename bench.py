@@ -1,8 +1,8 @@
 """Benchmark runner (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line to stdout:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: nproc) and
+prints ONE JSON line to stdout:
 
     {"metric": "...", "value": <total headline sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ...,
@@ -50,7 +50,9 @@ if sys.argv[1:]:
 os.environ["SPARKOCR_EXTRACT_MEMO"] = "0"
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# default: the CPUs this process may run on (nproc), not a fixed width
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0)))))
 RUN_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
 # executor width for the N→4N scaling runs. Default 1 CPU/executor keeps
 # even the 4-executor point at ~12% machine utilisation, well under this

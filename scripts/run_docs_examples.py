@@ -31,7 +31,7 @@ def main() -> None:
 
     # -- quickstart ---------------------------------------------------------
     from sparkocr.corpus import build_training_corpus
-    from sparkocr.engine import SparkOcrEngine, ordered
+    from sparkocr.engine import SparkOcrEngine
     from sparkocr.session import get_spark
     from sparkocr.sources import docs_as_transcripts, write_ordered
 
@@ -40,7 +40,7 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     turns = docs_as_transcripts(docs)
     eng = SparkOcrEngine(spark)
-    result = ordered(eng.extract(turns))
+    result = eng.extract(turns)
     n = result.count()
     assert n == docs.count(), (n, docs.count())
     corpus = build_training_corpus(docs.select("doc_id", "source", "text"))

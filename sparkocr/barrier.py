@@ -38,6 +38,11 @@ one write. Two escape hatches:
   whose subplan is too large for executor memory + local disk (the
   checkpoint dir on HDFS/S3 is unbounded; executor spill disk is not).
 
+``persisted`` is that persist-around-the-action step on its own, with
+both escape hatches; the ordered sinks use it too, because
+``repartitionByRange`` samples its range bounds in a job of its own
+that recomputes the whole child (see ``sparkocr.engine.ordered``).
+
 Lazy reliable pins are REJECTED (``eager=False`` + reliable mode): the
 triggering consumer would read evaluation #1 while the checkpoint
 files store a recomputed evaluation #2 — the exact silent-two-answers
@@ -61,6 +66,8 @@ consumer runs.
 from __future__ import annotations
 
 import warnings
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -115,22 +122,36 @@ def pin(df: DataFrame, eager: bool = True) -> DataFrame:
             "flag; set it on foreign sessions too.",
             stacklevel=2)
         _warned_no_cleanup = True
-    lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk or lvl.useOffHeap:
-        # caller already cached this plan: the checkpoint-write job
-        # reads that cache; persisting again would be a CacheManager
-        # no-op whose paired unpersist destroys the CALLER's entry
-        return df.checkpoint(eager=True)
-    if spark.conf.get(
-            "spark.sparkocr.pin.cache", "true").lower() != "true":
-        # explicit opt-out: compute-twice, zero cache storage (for
-        # subplans larger than executor memory + spill disk)
-        return df.checkpoint(eager=True)
     # persist around the eager checkpoint: the checkpoint-write job
     # re-evaluates the RDD (SPARK-8582), and without the cache that
     # means computing every pinned subplan twice
+    with persisted(df) as once:
+        return once.checkpoint(eager=True)
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Hold ``df`` at ``MEMORY_AND_DISK`` for the block, so that every
+    job run inside it reads one evaluation of ``df``, then unpersist it
+    (also when the block raises). The two escape hatches of ``pin``
+    apply: an input the caller already cached is yielded as is and its
+    cache entry left alone, and ``spark.sparkocr.pin.cache=false``
+    yields ``df`` uncached (every job recomputes it)."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk or lvl.useOffHeap:
+        # caller already cached this plan: the jobs read that cache;
+        # persisting again would be a CacheManager no-op whose paired
+        # unpersist destroys the CALLER's entry
+        yield df
+        return
+    if df.sparkSession.conf.get(
+            "spark.sparkocr.pin.cache", "true").lower() != "true":
+        # explicit opt-out: compute-twice, zero cache storage (for
+        # subplans larger than executor memory + spill disk)
+        yield df
+        return
     cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return cached.checkpoint(eager=True)
+        yield cached
     finally:
         cached.unpersist(False)

@@ -16,12 +16,23 @@ UDFs / mapInPandas (zero per-row Python UDFs); the fused ``extract`` is a
 single narrow mapInPandas stage — one job over the whole table with NO
 shuffle, the columnar replacement for the reference's one-request-per-
 image worker loop (engine.rs:413-437). Ordering is never implicit: use
-``ordered()`` / ``with_rank()`` before any order-sensitive sink
-(Catalyst does not preserve order through exchanges)."""
+``ordered()`` / ``with_rank()`` or an ordered sink of
+``sparkocr.sources`` (Catalyst does not preserve order through
+exchanges).
+
+Cost model of ordering: ``repartitionByRange`` samples its range bounds
+in a job of its own, which evaluates the whole child before the
+shuffle-map stage evaluates it again. The ordered sinks
+(``write_ordered``, ``write_text``, ``write_json_blocks``, ``to_arrow``,
+``write_debug_html``) and ``with_rank`` persist their input around
+their action, so the extraction kernel runs once per row. A bare lazy
+``ordered()`` handed to any other action still evaluates its child
+twice: once in the bound-sampling job, once in the shuffle."""
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Optional
 
 import numpy as np
@@ -38,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .barrier import pin
+from .barrier import persisted, pin
 from .config import DEFAULT_CONFIG, FLAGSHIP_CONFIG, EngineConfig
 from .detect import (
     TurnGrid,
@@ -374,11 +385,13 @@ def with_rank(df: DataFrame, conv_col: str = "conv_id",
     index-restoring reassembly analog, efficient_cropping.rs:186-202).
 
     Cost model (honest): one full-data shuffle (the range partition)
-    PLUS an eager materialization barrier — calling this runs a Spark
-    job immediately and pins the sorted dataset (checkpoint storage)
-    for the lifetime of the returned plan. The barrier is what makes
-    the rank deterministic: the offsets aggregate and the join's
-    stream side both read the sorted subplan, and range partitioning
+    PLUS an eager materialization barrier — calling this runs Spark
+    jobs immediately and pins the sorted dataset (checkpoint storage)
+    for the lifetime of the returned plan. ``df`` is evaluated once:
+    it is held in the cache while the range bounds are sampled and the
+    pin is written, and released before this returns. The barrier is
+    what makes the rank deterministic: the offsets aggregate and the
+    join's stream side both read the sorted subplan, and range partitioning
     samples nondeterministically — without the pin their agreement
     would depend on Spark's exchange reuse collapsing the two reads
     (an AQE replan can break stage dedup), silently corrupting ranks.
@@ -388,18 +401,20 @@ def with_rank(df: DataFrame, conv_col: str = "conv_id",
     is aggregated and broadcast back: rank = partition offset + local
     row number; ties on the full key get an arbitrary (but pinned)
     order, like the single-window form this replaces.
-    Use :func:`ordered` in data paths that only need sorted output —
-    it has no barrier and no storage footprint; reach for with_rank
+    Use an ordered sink of ``sparkocr.sources`` (or :func:`ordered`)
+    in data paths that only need sorted output — no barrier, and no
+    storage that outlives the action; reach for with_rank
     only when the materialized global rank itself is the product. On
     a real cluster set a checkpoint dir (``sc.setCheckpointDir``) so
     the pin survives executor loss (see ``sparkocr.barrier``)."""
-    local = pin(
-        ordered(df, conv_col, turn_col)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33))
-        .withColumn("__lrn",
-                    F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + 1)
-    )
+    with _ordered_once(df, conv_col, turn_col) as sorted_df:
+        local = pin(
+            sorted_df
+            .withColumn("__mid", F.monotonically_increasing_id())
+            .withColumn("__pid", F.shiftright("__mid", 33))
+            .withColumn("__lrn",
+                        F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + 1)
+        )
     # one row per partition: the offset table is partition-count-sized,
     # so the global window over it is trivially cheap
     w_off = Window.orderBy("__pid").rowsBetween(
@@ -425,10 +440,31 @@ def ordered(df: DataFrame, conv_col: str = "conv_id",
     """Range-partition + in-partition sort by (conv_id, turn_idx):
     deterministic global order for sinks WITHOUT a single-reducer
     bottleneck. Range partitioning splits whale conversations across
-    tasks on turn_idx — the skew answer for ordered writes."""
+    tasks on turn_idx — the skew answer for ordered writes.
+
+    Lazy, no storage footprint — and so each action on the result
+    evaluates ``df`` twice: once in the job that samples the range
+    bounds, once in the shuffle-map stage. The ordered sinks of
+    ``sparkocr.sources`` and ``with_rank`` avoid this (they order
+    through ``_ordered_once``); cache ``df`` yourself before running
+    other actions on ``ordered(df)`` when ``df`` is expensive."""
     parts = [F.col(conv_col), F.col(turn_col)]
     rp = df.repartitionByRange(partitions, *parts) if partitions else df.repartitionByRange(*parts)
     return rp.sortWithinPartitions(*parts)
+
+
+@contextmanager
+def _ordered_once(df: DataFrame, conv_col: str = "conv_id",
+                  turn_col: str = "turn_idx",
+                  partitions: int | None = None) -> Iterator[DataFrame]:
+    """``ordered(df)`` for the actions run inside the block, with ``df``
+    evaluated once: ``df`` stays persisted (``barrier.persisted``) while
+    the range-bound sampling job fills the cache and the shuffle-map
+    stage reads it, and is unpersisted when the block exits. An input
+    the caller cached is used as is; ``spark.sparkocr.pin.cache=false``
+    opts out (compute-twice, no cache storage)."""
+    with persisted(df) as once:
+        yield ordered(once, conv_col, turn_col, partitions)
 
 
 def explode_blocks(result: DataFrame) -> DataFrame:

@@ -18,10 +18,12 @@ carries the two scale decisions the north rule names:
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import ordered
+from .engine import _ordered_once
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -80,28 +82,30 @@ def docs_as_transcripts(docs: DataFrame) -> DataFrame:
 def write_ordered(df: DataFrame, location: str, fmt: str = "auto",
                   partitions: int | None = None) -> None:
     """Range-partitioned ordered sink: deterministic (conv_id, turn_idx)
-    clustering without a single-reducer global sort. On Iceberg this is
-    a sorted append into the table's partition spec; on parquet the
-    range partitioning itself provides the clustered file layout."""
-    out = ordered(df, partitions=partitions)
+    clustering without a single-reducer global sort. On Iceberg this
+    sorted write creates or replaces the table (``createOrReplace``,
+    the parquet path's overwrite semantics); on parquet the range
+    partitioning itself provides the clustered file layout. ``df`` is
+    evaluated once (see ``sparkocr.engine`` on the cost model)."""
     fmt = _negotiate_fmt(df.sparkSession, location, fmt)
-    if fmt == "iceberg":
-        # createOrReplace mirrors the parquet path's overwrite semantics
-        # (and works when the table does not exist yet); use
-        # out.writeTo(location).append() directly for incremental loads
-        out.writeTo(location).createOrReplace()
-    else:
-        out.write.mode("overwrite").parquet(location)
+    with _ordered_once(df, partitions=partitions) as out:
+        if fmt == "iceberg":
+            # createOrReplace works when the table does not exist yet;
+            # use ordered(df).writeTo(location).append() directly for
+            # incremental loads
+            out.writeTo(location).createOrReplace()
+        else:
+            out.write.mode("overwrite").parquet(location)
 
 
 def write_json_blocks(result: DataFrame, location: str) -> None:
     """JSON sink (S6 parity, main.rs:134-197): one JSON object per turn
     with its block array, spans included."""
-    (
-        ordered(result)
-        .select(F.to_json(F.struct(*result.columns)).alias("value"))
-        .write.mode("overwrite").text(location)
-    )
+    with _ordered_once(result) as out:
+        (
+            out.select(F.to_json(F.struct(*result.columns)).alias("value"))
+            .write.mode("overwrite").text(location)
+        )
 
 
 def debug_html(text: str, blocks) -> str:
@@ -142,11 +146,10 @@ def write_debug_html(result: DataFrame, location: str,
     data path)."""
     import html as _html
 
-    rows = (
-        ordered(result).select("conv_id", "turn_idx", "blocks", "source_text")
-        if "source_text" in result.columns else
-        ordered(result).select("conv_id", "turn_idx", "blocks")
-    ).limit(limit).collect()
+    cols = ["conv_id", "turn_idx", "blocks"] + (
+        ["source_text"] if "source_text" in result.columns else [])
+    with _ordered_once(result) as out:
+        rows = out.select(*cols).limit(limit).collect()
     texts = {}
     if text_df is not None:
         # only fetch the texts of the turns actually rendered — a full
@@ -180,18 +183,18 @@ def to_arrow(result: DataFrame, limit: int | None = None):
     stream interface). Driver-side materialization: cap with ``limit``
     or aggregate first; the DATA path stays in Spark — this is the
     hand-off at the end, exactly like the reference's C ABI."""
-    out = (ordered(result)
-           if {"conv_id", "turn_idx"} <= set(result.columns) else result)
-    if limit is not None:
-        out = out.limit(limit)
-    return out.toArrow()
+    keyed = {"conv_id", "turn_idx"} <= set(result.columns)
+    with _ordered_once(result) if keyed else nullcontext(result) as out:
+        if limit is not None:
+            out = out.limit(limit)
+        return out.toArrow()
 
 
 def write_text(result: DataFrame, location: str) -> None:
     """Text sink (S5 parity, main.rs:199-208): full_text per turn in
     stable order."""
-    (
-        ordered(result)
-        .select(F.coalesce(F.col("full_text"), F.lit("")).alias("value"))
-        .write.mode("overwrite").text(location)
-    )
+    with _ordered_once(result) as out:
+        (
+            out.select(F.coalesce(F.col("full_text"), F.lit("")).alias("value"))
+            .write.mode("overwrite").text(location)
+        )

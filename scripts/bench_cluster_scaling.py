@@ -222,9 +222,9 @@ def _corpus_transcripts(spark, reps: int):
     the deterministic `fixtures.turns_pandas` conversations — ~16%
     single-line chat, ~53% multi-line plain, ~12% markup, plus tool/
     document rows — replicated ``reps``× with replica-unique conv ids.
-    Exercises the full fastbatch stage-1/stage-2/fallback composition
+    Exercises the full fastbatch plain/general/fallback composition
     on the real cluster, where `_corpus` (single-line documents) only
-    ever hits stage 1."""
+    ever hits the plain machine's one-line case."""
     from sparkocr.fixtures import turns_pandas
 
     base = spark.createDataFrame(

@@ -13,11 +13,11 @@ dictionary, min_score=1.0).
 
 Last full run (2026-08-19, 3000 batches x 64 rows, seeds 1000..3999,
 markup + document grammars, cycling plain/allow_formfeed/roles modes
-so stages 3 AND 4 are drilled): 192,000 rows, 92.6% fast-path, 0
-divergences. A second sweep the same day on a DISJOINT seed range
-(1500 batches x 64 rows, seeds 50000..51499) added 96,000 rows,
-92.6% fast-path, 0 divergences — 288,000 fuzzed rows total against
-the per-turn oracle at round-4 HEAD. A third disjoint sweep (seeds
+so the markup and document batch machines are drilled): 192,000 rows,
+92.6% fast-path, 0 divergences. A second sweep the same day on a
+DISJOINT seed range (1500 batches x 64 rows, seeds 50000..51499) added
+96,000 rows, 92.6% fast-path, 0 divergences — 288,000 fuzzed rows total
+against the per-turn oracle at round-4 HEAD. A third disjoint sweep (seeds
 300000..301499, 96,000 rows, 0 divergences) ran after the late-round
 detector/crop fast paths (boiler-gate vectorization, two-box merge
 unroll, full-width crop slices) — 384,000 fuzzed rows total. A
@@ -46,7 +46,14 @@ divergences. An eleventh capstone sweep (12000 batches x 64 rows,
 seeds 7000000..7011999) added 768,000 rows, 92.6% fast-path, 0
 divergences — **2,476,800 fuzzed rows total, zero divergences across
 eleven disjoint seed ranges and three batch geometries (16/64/512)**
-at round-4 final HEAD.
+at round-4 final HEAD. A twelfth sweep (seeds 5500000..5501499,
+96,000 rows, 92.5% fast-path, 0 divergences) brought the total to
+2.57M. A thirteenth sweep (2026-10-18, 1500 batches x 64 rows, seeds
+8000000..8001499) ran after fastbatch's single-line stage folded into
+the plain machine and the route predicates became one classifier:
+96,000 rows, 92.5% fast-path (88,805 rows — the same count the
+previous code takes on that range), 0 divergences — **2,668,800 fuzzed
+rows total** across thirteen disjoint seed ranges.
 
 Usage: python scripts/fuzz_fastbatch.py [n_batches] [batch_size] [seed0]
 (seed0 picks the base of the per-batch seed range — pass a fresh value
@@ -82,7 +89,7 @@ HOSTILE = [
     "&#10;", "&#60;", "&lt;b&gt;", "&#55296;", "\f", "\x1b[31m",
     "<b>", "</b>", "\ud800", "\udfff", "😀",
 ]
-# stage-4 drill: document-shaped payloads (pages joined by \f with
+# document-machine drill: document-shaped payloads (pages joined by \f with
 # recurring running heads and numeric tails) so the routing mode
 # exercises the layout classifier's data-dependent paths — running-head
 # Counter thresholds, the page-number tail check, the covered-overlap
@@ -110,8 +117,8 @@ def _doc_payload(rng):
     return "\f".join(pages)
 
 
-# stage-3 drill: real tags/anchors/comments/script/ANSI/boiler so most
-# rows land in the markup batch machine (not the fallback gates)
+# general-machine drill: real tags/anchors/comments/script/ANSI/boiler
+# so most rows land in the general machine (not the fallback gates)
 MARKUP = [
     "<b>", "</b>", "<a href=/x>", "</a>", "<a>link</a>", "<!--", "-->",
     "<script>", "</script>", "<style>p{}</style>", "<br/>", "<td>c</td>",
@@ -121,11 +128,11 @@ MARKUP = [
 ]
 # shape-biased grammars: (pieces, weight)
 GRAMMARS = [
-    (PLAIN, 5),                       # single-line plain
-    (PLAIN + NEWLINES, 4),            # multi-line plain
+    (PLAIN, 5),                       # plain machine, one line
+    (PLAIN + NEWLINES, 4),            # plain machine, many lines
     (PLAIN + NEWLINES + HOSTILE, 2),  # mixed / mostly fallback
     (PLAIN + ["&#10;"] * 4, 2),       # entity-minted newlines
-    (PLAIN + NEWLINES + MARKUP, 3),   # markup-bearing (stage 3)
+    (PLAIN + NEWLINES + MARKUP, 3),   # markup-bearing (general machine)
 ]
 GRAMMAR_POOL = [g for g, w in GRAMMARS for _ in range(w)]
 
@@ -151,15 +158,18 @@ def main(n_batches=2000, batch_size=64, seed0=1000):
             texts.append("".join(rng.choice(pieces) for _ in range(k)))
         name, cfg = CONFIGS[bi % len(CONFIGS)]
         # cycle the engine's three modes: plain (\f rows fall back),
-        # allow_formfeed (\f rows run the stage-3 general machine), and
-        # routing (roles array: tool+\f rows run the stage-4 document
-        # machine, other \f rows run stage 3)
+        # allow_formfeed (\f rows run the general machine), and routing
+        # (roles array: tool+\f rows run the document machine, other \f
+        # rows run the general machine); in every mode the route
+        # classifier sends plain rows, one line or many, to the plain
+        # machine and markup/ANSI rows to the general machine
         mode = bi % 3
         aff = mode == 1
         roles = None
         if mode == 2:
             # routing mode: swap ~1/3 of rows for document-shaped
-            # payloads so the stage-4 classifier paths get real input
+            # payloads so the document machine's layout classifier
+            # paths get real input
             texts = [(_doc_payload(rng) if rng.random() < 0.35 else t)
                      for t in texts]
             roles = [rng.choice(["user", "assistant", "tool", "tool"])

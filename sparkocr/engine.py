@@ -252,11 +252,11 @@ class SparkOcrEngine:
                 # (byte-identical to the per-turn path — differential-
                 # tested); residue rows fall through below. Form-feed
                 # rows batch in BOTH modes: without routing they run
-                # the stage-3 general machine (extract_turn folds \f to
-                # \n — same semantics, batched); with routing the roles
-                # array sends tool-role documents through the stage-4
+                # the general machine (extract_turn folds \f to \n —
+                # same semantics, batched); with routing the roles
+                # array sends tool-role documents through the document
                 # machine (batched layout parse + pooled decode) and
-                # other \f rows through stage 3, mirroring
+                # other \f rows through the general machine, mirroring
                 # extract_turn_auto's own dispatch.
                 # roles is only populated when route_documents is on
                 fast = batch_extract_simple(
@@ -505,33 +505,9 @@ def get_instance() -> SparkOcrEngine:
     return _INSTANCE
 
 
-# module-level singleton verbs (the engine.rs free-function surface:
-# `ocr::process_ocr(img)` etc. delegate to the initialized manager) —
-# each raises the not-initialized error until initialize() has run
+# module-level singleton verb (the engine.rs free-function surface:
+# `ocr::process_ocr(img)` delegates to the initialized manager) —
+# raises the not-initialized error until initialize() has run
 
 def process_ocr(df: DataFrame, **kw) -> DataFrame:
     return get_instance().extract(df, **kw)
-
-
-def process_ocr_efficient(df: DataFrame, **kw) -> DataFrame:
-    return get_instance().extract_fast(df, **kw)
-
-
-def detect_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks(df, text_col)
-
-
-def get_text_rects(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().spans(df, text_col)
-
-
-def get_text_images(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks(df, text_col)
-
-
-def get_text_images_efficient(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().blocks_fast(df, text_col)
-
-
-def recognize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return get_instance().recognize(df, text_col)

@@ -1,64 +1,56 @@
-"""Batch-vectorized fast paths for common turn shapes (round-4 work).
+"""Batch-vectorized extraction: one flat machine per Arrow batch.
 
-The per-turn pipeline already short-circuits the common chat-message
-shape — one line, no markup, no ANSI — inside ``detect.find_text_boxes``
-(det.py fast path), but the per-turn cost was still dominated by the
-~40 small numpy allocations each ``recognize_crop`` call makes. This
-module lifts that work to the Arrow-batch level, in two stages:
+The per-turn pipeline (``pipeline.extract_turn``) pays ~40 small numpy
+allocations per ``recognize_crop`` call. This module lifts detection,
+crop assembly and decode to the Arrow-batch level. ONE route
+classifier (``_route``) sends each row to one of three batch machines,
+or to the per-turn fallback:
 
-- **Stage 1 (single-line)**: eligible turns are detected with cheap
-  C-level string scans and their canonical crops enter the flat decode
-  directly (one box per turn by construction).
-- **Stage 2 (multi-line plain)**: turns with newlines but still no
-  markup/ANSI/form-feed — 60%+ of transcript-shaped corpora — run
-  per-LINE detection with the same C-level string ops (for plain text
-  the whole probability-map cascade reduces to "has a visible char and
-  is not boilerplate": density is 1, score is exactly 255 or 0), then
-  the verbatim transitive merge (``detect.merge_overlapping_boxes`` —
-  the exact fixpoint, not a re-implementation) over each turn's
-  handful of line boxes, then crop assembly by plain string slicing
-  (no markup to blank).
+- **plain** (``_plain_crops``): no markup, no ANSI, no form-feed — a
+  single-line chat message is just its one-line case. Detection runs
+  per LINE with C-level string ops: for plain text the probability-map
+  cascade reduces exactly to "has a visible char and is not
+  boilerplate" (density is 1, the score is exactly 255 or 0). The
+  transitive merge is detect's own fixpoint (``_merge_ltrb``) and
+  crops assemble by plain string slicing (nothing to blank).
+- **general** (``_markup_batch``): markup/ANSI-bearing turns, plus
+  form-feed turns that no document router claims. Detection is
+  ``detect.find_text_boxes_batch`` — the exact general-path semantics
+  (``TurnGrid``, ``_density_scores``, ``merge_overlapping_boxes``) with
+  the per-ON-line segment loop of ``find_text_boxes`` replaced by ONE
+  diff/searchsorted pass over the batch's concatenated character grid.
+  Crops assemble through ``detect.crop_box`` (markup blanked).
+- **document** (``_document_batch``): in routing mode, form-feed turns
+  with role ``tool`` run the batched layout parse
+  (``layout.parse_documents_batch``), byte-identical to
+  ``pipeline.extract_turn_auto``'s document branch.
 
-Crops from BOTH stages are concatenated into ONE flat codepoint array
-(NUL separators) and decoded by the shared state machine
+Crops from all three machines are concatenated into ONE flat codepoint
+array (NUL separators) and decoded by the shared state machine
 (``recognize.decode`` with ``seg_ids`` — the single home of the decode
 semantics, rec.rs:344-398) in a handful of numpy passes. Per-row
 Python shrinks to string slicing plus one small float32 reduction.
 
-Byte-exactness contract: for every eligible turn the result equals
-``pipeline.extract_turn`` EXACTLY (text, confidence bits, spans,
-geometry, block type) — enforced by the differential suite in
-tests/test_fastbatch.py. Anything the flat machine cannot reproduce
-bit-for-bit (entities decoding into markup, lone surrogates) is
-declared ineligible and falls back to the per-turn path; eligibility
-errs toward fallback, never toward approximation.
+Byte-exactness contract: for every routed turn the result equals the
+per-turn path EXACTLY (text, confidence bits, spans, geometry, block
+type) — enforced by the differential suite in tests/test_fastbatch.py.
+Anything the flat machine cannot reproduce bit-for-bit is routed to
+the per-turn path; routing errs toward fallback, never toward
+approximation:
 
-Stage-1 eligible = text is a str containing none of ``\\n \\r \\f <
-\\x1b`` whose canonical crop still contains no ``<``/ESC (entity
-decode can mint them). Stage-2 eligible = str containing a newline
-(``\\n``/``\\r``) but no ``< \\x1b \\f`` — form-feed turns stay on the
-per-turn path so the document router (pipeline.extract_turn_auto)
-keeps seeing them.
-
-- **Stage 3 (markup-bearing)**: turns containing ``<`` or ESC (but no
-  form-feed) run the EXACT general detection semantics — ``TurnGrid``
-  and ``line_scores`` are the per-turn functions themselves, and the
-  transitive merge is ``detect.merge_overlapping_boxes`` — but the
-  per-ON-line segment loop of ``find_text_boxes`` (3 ``flatnonzero``
-  calls per line, the measured hot spot on markup rows) is replaced by
-  ONE diff/searchsorted pass over the whole batch's concatenated
-  character grid. Crops assemble through ``detect.crop_box`` (markup
-  blanked — so their canonical form is normally markup-free and in the
-  flat decode's domain) and pool into the same flat decode as stages
-  1/2.
-
-The domain gate is shared by all three stages (``_canon_in_domain``):
-a crop whose canonical form would make ``char_scores`` see a non-empty
-markup mask — entity decode minting real tags, an ANSI run surviving
-into the crop — falls the whole row back to the per-turn path, which
-owns the markup-scoring branch. Text that merely CONTAINS ``<`` but
-forms no tag (``<1notag>``) and lone ESC bytes the ANSI scanner does
-not match stay in-domain: both score identically on either path.
+- non-str values and lone/paired surrogates (the per-turn UTF-32
+  encode raises and returns an error ROW) never enter a machine;
+- form-feed turns fall back unless the caller enables a form-feed
+  route (``allow_formfeed`` or ``roles``), so the document router
+  (``pipeline.extract_turn_auto``) keeps seeing them;
+- the domain gate shared by all three machines (``_canon_in_domain``):
+  a crop whose canonical form would make ``char_scores`` see a
+  non-empty markup mask — entity decode minting real tags, an ANSI run
+  surviving into the crop — falls the whole row back to the per-turn
+  path, which owns the markup-scoring branch. Text that merely
+  CONTAINS ``<`` but forms no tag (``<1notag>``) and lone ESC bytes
+  the ANSI scanner does not match stay in-domain: both score
+  identically on either path.
 
 Entity-minted newlines (``&#10;``) stay in-domain:
 detection geometry comes from the pre-canonicalize lines on both
@@ -144,56 +136,44 @@ def _canon_in_domain(canon: str) -> bool:
     return not markup_mask(canon).any()
 
 
-def _eligible(t) -> bool:
-    """The det.py fast-path shape: one line (no \\n, and no \\r/\\f that
-    TurnGrid would fold into one), no markup, no ANSI."""
-    return (
-        isinstance(t, str)
-        and "\n" not in t and "\r" not in t and "\f" not in t
-        and "<" not in t and "\x1b" not in t
-        and _no_surrogates(t)
-    )
+PLAIN, GENERAL, DOCUMENT = "plain", "general", "document"
 
 
-def _eligible_multiline(t) -> bool:
-    """Stage 2: multi-line plain text. No markup/ANSI, and no form-feed
-    (the document router keys on \\f — those rows must keep reaching
-    pipeline.extract_turn_auto on the per-turn path)."""
-    return (
-        isinstance(t, str)
-        and ("\n" in t or "\r" in t) and "\f" not in t
-        and "<" not in t and "\x1b" not in t
-        and _no_surrogates(t)
-    )
+def _route(t, role=None, formfeed: bool = False):
+    """THE route classifier: which batch machine runs ``t``, or ``None``
+    for the per-turn fallback.
 
+    - ``PLAIN``: a str with no ``<``, ESC or form-feed, any line count
+      (``\\r`` and ``\\n`` are line breaks the plain machine folds);
+    - ``GENERAL``: markup/ANSI-bearing turns, and form-feed turns when
+      ``formfeed`` is set and ``role`` is not ``tool``;
+    - ``DOCUMENT``: form-feed turns with role ``tool`` when ``formfeed``
+      is set (only routing mode passes a role).
 
-def _eligible_markup(t) -> bool:
-    """Stage 3: markup/ANSI-bearing turns. Form-feed rows stay on the
-    per-turn path (document router); surrogate rows fall back up front
-    (same reason as stages 1/2)."""
-    return (
-        isinstance(t, str)
-        and ("<" in t or "\x1b" in t) and "\f" not in t
-        and _no_surrogates(t)
-    )
-
-
-def _eligible_formfeed(t) -> bool:
-    """Form-feed rows for the NON-routing extract path: when the caller
-    is ``extract_turn`` (no document router in play), ``TurnGrid``
-    folds ``\\f`` to ``\\n`` and the turn is just another general-path
-    turn — the stage-3 machine handles it exactly. Callers that route
-    documents (``extract_turn_auto``) must NOT enable this: the router
-    keys on ``\\f`` and those rows need to reach it."""
-    return isinstance(t, str) and "\f" in t and _no_surrogates(t)
+    Form-feed turns without ``formfeed`` fall back: the document router
+    keys on ``\\f``, so the caller's per-turn path must see them. Non-str
+    values and surrogate-bearing turns fall back up front (see
+    ``_no_surrogates``; checked once, after the shape)."""
+    if not isinstance(t, str):
+        return None
+    if "\f" in t:
+        if not formfeed:
+            return None
+        route = DOCUMENT if role == "tool" else GENERAL
+    elif "<" in t or "\x1b" in t:
+        route = GENERAL
+    else:
+        route = PLAIN
+    return route if _no_surrogates(t) else None
 
 
 def _document_batch(d_rows, config: EngineConfig,
                     out, rows, canons, metas) -> None:
-    """Stage-4: routing-mode document turns (tool role + form-feed).
-    The layout parse runs batched (``layout.parse_documents_batch`` —
-    every page of every payload shares one detection pass) and the
-    body/table region decodes pool into the shared flat decode.
+    """The document machine: routing-mode document turns (tool role +
+    form-feed). The layout parse runs batched
+    (``layout.parse_documents_batch`` — every page of every payload
+    shares one detection pass) and the body/table region decodes pool
+    into the shared flat decode.
     Byte-identical to ``pipeline.extract_turn_auto``'s document branch:
     blocks carry the region type as block_type and page-granular
     geometry (left=0, top=page·LINE_HEIGHT, width=span length), pos
@@ -228,10 +208,10 @@ def _document_batch(d_rows, config: EngineConfig,
         metas.extend(r_metas)
 
 
-def _markup_batch(m_rows, config: EngineConfig, border: int,
+def _markup_batch(m_rows, config: EngineConfig,
                   out, rows, canons, metas) -> None:
-    """Stage-3 detection + crop assembly for a batch of markup-bearing
-    (or, under ``allow_formfeed``, form-feed) turns. Detection is
+    """The general machine: detection + crop assembly for a batch of
+    markup-bearing (or routed form-feed) turns. Detection is
     ``detect.find_text_boxes_batch`` — the exact general-path semantics
     with the per-ON-line segment loop batched over all turns at once —
     and ``crop_box`` is the per-turn function. Successful rows append
@@ -262,13 +242,32 @@ def _markup_batch(m_rows, config: EngineConfig, border: int,
         metas.extend(r_metas)
 
 
-def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
-    """Detection + crop assembly for one multi-line plain turn, with
-    C-level string ops only — semantics verbatim from the general path
-    (TurnGrid fold → line_scores → find_text_boxes → crop_box):
+def _plain_batch(p_rows, config: EngineConfig,
+                 out, rows, canons, metas) -> None:
+    """The plain machine over a batch: ``_plain_crops`` per turn, the
+    crops pooled into the shared flat decode; a row with no box is
+    empty, a row with an out-of-domain crop is left at ``None``."""
+    border = config.rect_border_size
+    for i, t in p_rows:
+        got = _plain_crops(t, config, border)
+        if got is None:
+            continue  # a crop minted markup: per-turn path
+        r_canons, r_metas = got
+        if not r_canons:
+            out[i] = _empty()
+            continue
+        rows.append((i, len(canons), len(canons) + len(r_canons)))
+        canons.extend(r_canons)
+        metas.extend(r_metas)
+
+
+def _plain_crops(t: str, config: EngineConfig, border: int):
+    """Detection + crop assembly for one plain turn (any line count),
+    with C-level string ops only — semantics verbatim from the general
+    path (TurnGrid fold → line_scores → find_text_boxes → crop_box):
 
     - fold: ``\\r\\n`` → `` \\n`` (same length, offsets preserved),
-      ``\\r`` → ``\\n`` (no \\f by eligibility)
+      ``\\r`` → ``\\n`` (no \\f on this route)
     - per-line score: for text with no markup and no anchors the
       probability map is exactly 255 (any visible char, not boiler)
       or 0, so ON = visible and not boilerplate
@@ -289,8 +288,8 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
     lines = folded.split("\n")
     grid_h = len(lines) * LINE_HEIGHT
     # (left, top, right, bottom) tuples end-to-end: the merge fixpoint
-    # runs on ltrb tuples anyway (detect._merge_ltrb), so building Box
-    # objects before the merge just paid a conversion both ways
+    # runs on ltrb tuples anyway (detect._merge_ltrb), so a Box is built
+    # only for each emitted crop's meta
     ltrb: list[tuple] = []
     for y, ln in enumerate(lines):
         c0 = len(ln) - len(ln.lstrip(" \t"))
@@ -310,7 +309,6 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
         ltrb = _merge_ltrb(ltrb, config.merge_threshold)
     if not ltrb:
         return [], []
-    boxes = [Box(l, tp, r - l + 1, b - tp + 1) for (l, tp, r, b) in ltrb]
     lens = list(map(len, lines))
     offs, pos = [], 0
     for n_ln in lens:
@@ -320,11 +318,11 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
     canons: list[str] = []
     metas: list[tuple] = []
     last = len(lines) - 1
-    for box in boxes:
-        y0 = min(box.top // LINE_HEIGHT, last)
-        y1 = min(box.bottom // LINE_HEIGHT, last)
-        b_right = box.right + 1
-        if box.left == 0 and b_right >= maxlen:
+    for left, top, right, bottom in ltrb:
+        y0 = min(top // LINE_HEIGHT, last)
+        y1 = min(bottom // LINE_HEIGHT, last)
+        b_right = right + 1
+        if left == 0 and b_right >= maxlen:
             # full-width box (the dominant shape: unindented text whose
             # merged box spans every covered line end-to-end): every
             # covered line's clamp is [0, len(ln)], so the per-line
@@ -334,17 +332,18 @@ def _plain_multiline_crops(t: str, config: EngineConfig, border: int):
             parts = []
             for y in range(y0, y1 + 1):
                 n_ln = lens[y]
-                a = box.left if box.left < n_ln else n_ln
+                a = left if left < n_ln else n_ln
                 b = b_right if b_right < n_ln else n_ln
                 parts.append(lines[y][a:b] if b > a else "")
             crop = "\n".join(parts)
         canon = canonicalize(crop, config.max_rec_lines)
         if not _canon_in_domain(canon):
             return None
-        start = offs[y0] + min(box.left, lens[y0])
+        start = offs[y0] + min(left, lens[y0])
         end = offs[y1] + min(b_right, lens[y1])
         canons.append(canon)
-        metas.append((box, start, end))
+        metas.append((Box(left, top, b_right - left, bottom - top + 1),
+                      start, end))
     return canons, metas
 
 
@@ -353,100 +352,55 @@ def batch_extract_simple(
     allow_formfeed: bool = False,
     roles=None,
 ) -> list:
-    """Process every eligible turn of ``texts`` (a sequence of
+    """Process every routable turn of ``texts`` (a sequence of
     already-``_clean_text``-ed values) in one vectorized pass. Returns a
-    list aligned with ``texts``: a ``TurnResult`` where a fast path
-    applied, ``None`` where the caller must run the per-turn pipeline.
+    list aligned with ``texts``: a ``TurnResult`` where a batch machine
+    ran the row, ``None`` where the caller must run the per-turn
+    pipeline.
+
+    One dispatch: ``_route`` classifies each row once, then each of the
+    three batch machines (plain, general, document) runs over its rows
+    and pools its crops into one flat decode.
 
     ``allow_formfeed=True`` additionally routes form-feed rows through
-    the stage-3 general machine (byte-identical to ``extract_turn``,
-    which folds ``\\f`` to ``\\n``). ONLY valid when the caller's
-    fallback is ``extract_turn`` — with ``route_documents`` the router
-    keys on ``\\f`` and those rows must fall back to it instead.
+    the general machine (byte-identical to ``extract_turn``, which
+    folds ``\\f`` to ``\\n``). ONLY valid when the caller's fallback is
+    ``extract_turn`` — with ``route_documents`` the router keys on
+    ``\\f`` and those rows must fall back to it instead.
 
     ``roles`` (aligned with ``texts``) enables the ROUTING-mode
     equivalent instead: form-feed turns with role ``tool`` run the
-    stage-4 document machine (batched layout parse + pooled decode,
+    document machine (batched layout parse + pooled decode,
     byte-identical to ``extract_turn_auto``'s document branch) and
-    form-feed turns with any other role run the stage-3 general machine
+    form-feed turns with any other role run the general machine
     (``extract_turn_auto`` sends exactly those to ``extract_turn``).
     Mutually exclusive with ``allow_formfeed``."""
-    n = len(texts)
-    out: list = [None] * n
-    border = config.rect_border_size
-    grid_h1 = LINE_HEIGHT  # stage-1 grid: single line
-    top1 = max(GLYPH_TOP - border, 0)
-    bottom1 = min(GLYPH_BOTTOM + border, grid_h1 - 1)
-    height1 = bottom1 - top1 + 1
+    out: list = [None] * len(texts)
+    formfeed = allow_formfeed or roles is not None
+    routed: dict = {PLAIN: [], GENERAL: [], DOCUMENT: []}
+    for i, t in enumerate(texts):
+        route = _route(t, roles[i] if roles is not None else None, formfeed)
+        if route is not None:
+            routed[route].append((i, t))
 
     canons: list[str] = []    # canonical crop text, all rows flattened
-    metas: list[tuple] = []   # per crop: (box, span_start, span_end)
+    metas: list[tuple] = []   # per crop: (box, span_start, span_end[, type])
     rows: list[tuple] = []    # per flat row: (row index, k0, k1) crop slice
-    m_rows: list[tuple] = []  # stage-3 (markup/general) rows: (row index, text)
-    d_rows: list[tuple] = []  # stage-4 (routed document) rows: (row index, text)
-    for i in range(n):
-        t = texts[i]
-        if _eligible(t):
-            # stage 1: single line — one box by construction
-            if ("[" in t or "=" in t) and is_boiler_line(t):
-                out[i] = _empty()
-                continue
-            c0 = len(t) - len(t.lstrip(" \t"))
-            c1 = len(t.rstrip(" \t")) - 1
-            if c1 - c0 <= MIN_BOX_SIZE:
-                out[i] = _empty()
-                continue
-            left = max(c0 - border, 0)
-            right = min(c1 + border, len(t) - 1)
-            canon = canonicalize(t[left:right + 1], config.max_rec_lines)
-            # post-canon gate: entity decode can mint '<' (markup
-            # scoring leaves the flat machine's domain) — those rows
-            # take the exact per-turn path. Minted '\n' needs no gate:
-            # canonicalize caps line count, and the flat machine
-            # reproduces recognize_crop's newline handling bit-for-bit
-            # (see module docstring).
-            if not _canon_in_domain(canon):
-                continue
-            box = Box(left, top1, right - left + 1, height1)
-            rows.append((i, len(canons), len(canons) + 1))
-            canons.append(canon)
-            metas.append((box, left, right + 1))
-        elif _eligible_multiline(t):
-            # stage 2: per-line detection + verbatim merge
-            got = _plain_multiline_crops(t, config, border)
-            if got is None:
-                continue  # a crop minted markup: per-turn path
-            r_canons, r_metas = got
-            if not r_canons:
-                out[i] = _empty()
-                continue
-            rows.append((i, len(canons), len(canons) + len(r_canons)))
-            canons.extend(r_canons)
-            metas.extend(r_metas)
-        elif _eligible_markup(t):
-            m_rows.append((i, t))
-        elif _eligible_formfeed(t):
-            if roles is not None:
-                (d_rows if roles[i] == "tool" else m_rows).append((i, t))
-            elif allow_formfeed:
-                m_rows.append((i, t))
-
-    for batch_fn, batch_rows in (
-        (lambda br: _markup_batch(br, config, border,
-                                  out, rows, canons, metas), m_rows),
-        (lambda br: _document_batch(br, config,
-                                    out, rows, canons, metas), d_rows),
+    for machine, batch_rows in (
+        (_plain_batch, routed[PLAIN]),
+        (_markup_batch, routed[GENERAL]),
+        (_document_batch, routed[DOCUMENT]),
     ):
         if not batch_rows:
             continue
         n_rows0, n_can0 = len(rows), len(canons)
         try:
-            batch_fn(batch_rows)
+            machine(batch_rows, config, out, rows, canons, metas)
         except Exception:
             # defensive backstop (no known trigger — surrogates are
-            # gated up front and the batch machines reuse the exact
-            # per-turn primitives): roll the pool back and send every
-            # row of this stage down the per-turn path, which
+            # routed to the fallback up front and the machines reuse the
+            # exact per-turn primitives): roll the pool back and send
+            # every row of this machine down the per-turn path, which
             # re-derives any _empty() rows identically
             del rows[n_rows0:]
             del canons[n_can0:]
@@ -459,9 +413,9 @@ def batch_extract_simple(
             _decode_flat(rows, canons, metas, out, config)
         except Exception:
             # defensive backstop for a poison batch (no known trigger —
-            # surrogates are gated up front and entity decode/NFC cannot
-            # mint them): retry nothing here — per-row fallback preserves
-            # the per-turn path's own poison-row containment
+            # surrogates are routed away up front and entity decode/NFC
+            # cannot mint them): retry nothing here — per-row fallback
+            # preserves the per-turn path's own poison-row containment
             for i, _, _ in rows:
                 out[i] = None
     return out
@@ -573,7 +527,7 @@ def _decode_flat(rows, canons, metas, out, config: EngineConfig) -> None:
         for j in range(k0, k1):
             meta = metas[j]
             box, start, end = meta[0], meta[1], meta[2]
-            # 4-element metas (stage 4) carry the block type — the
+            # 4-element metas (document machine) carry the block type — the
             # region classification from the layout parser — instead
             # of deriving it from the crop text
             btype = meta[3] if len(meta) > 3 else classify_block(canons[j])

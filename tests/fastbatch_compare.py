@@ -18,11 +18,11 @@ def assert_matches(texts, config=FLAGSHIP_CONFIG, min_eligible=None,
     block type) or the row is declared ineligible (None) and falls
     back. Returns the number of rows that took the fast path.
     ``allow_formfeed`` mirrors the engine's non-routing mode: \\f rows
-    run the stage-3 general machine and are still compared against
+    run the general machine and are still compared against
     extract_turn (which folds \\f — the same fallback the engine uses
     when routing is off). ``roles`` mirrors the routing mode: the
     oracle becomes extract_turn_auto(t, role) — the engine's
-    route_documents fallback — so stage-4 document rows are compared
+    route_documents fallback — so document-machine rows are compared
     against the layout-parse branch."""
     got = batch_extract_simple(list(texts), config,
                                allow_formfeed=allow_formfeed,

@@ -42,13 +42,14 @@ def test_ineligible_shapes_fall_back():
     texts = [
         None,
         float("nan"),  # engine._clean_text maps to None before the call
-        "form\ffeed",  # NO stage takes \f: the document router
+        "form\ffeed",  # NO machine takes \f: the document router
         #              (extract_turn_auto) keys on it for tool turns
         "<form\ffeed>",  # markup plus \f still falls back (router)
         "entity-minted markup &lt;script&gt; stays exact",
         "multi\nline with entity-minted markup &lt;tag&gt; falls back",
-        # stage-3 rows whose CROP canonicalizes back into REAL markup
-        # leave the flat machine's domain (char_scores' markup branch)
+        # general-machine rows whose CROP canonicalizes back into REAL
+        # markup leave the flat machine's domain (char_scores' markup
+        # branch)
         "<b>tag</b> then minted &lt;i&gt; inside the crop",
         "markup <b>plus</b> a minted ansi run &#27;[31m colour",
     ]
@@ -59,7 +60,7 @@ def test_ineligible_shapes_fall_back():
 
 
 def test_markup_turns_match_and_take_the_fast_path():
-    """Stage 3: markup/ANSI-bearing turns run the exact general
+    """General machine: markup/ANSI-bearing turns run the exact general
     detection semantics with batched run extraction, crops pooled into
     the shared flat decode — byte-identical to the per-turn path."""
     texts = [
@@ -85,7 +86,7 @@ def test_markup_turns_match_and_take_the_fast_path():
 
 
 def test_formfeed_turns_match_under_allow_formfeed():
-    """Non-routing mode: \\f rows run the stage-3 general machine
+    """Non-routing mode: \\f rows run the general machine
     (TurnGrid folds \\f to \\n on both paths) and must be byte-identical
     to extract_turn. With the flag OFF (the default, and the engine's
     route_documents mode) the same rows must all fall back so the
@@ -107,11 +108,12 @@ def test_formfeed_turns_match_under_allow_formfeed():
 
 
 def test_routing_mode_document_turns_match():
-    """Stage 4: with a roles array (the engine's route_documents mode)
-    tool-role form-feed turns run the batched layout parse + pooled
-    decode and must be byte-identical to extract_turn_auto's document
-    branch; \\f rows with other roles run the stage-3 general machine
-    (extract_turn_auto sends exactly those to extract_turn)."""
+    """Document machine: with a roles array (the engine's
+    route_documents mode) tool-role form-feed turns run the batched
+    layout parse + pooled decode and must be byte-identical to
+    extract_turn_auto's document branch; \\f rows with other roles run
+    the general machine (extract_turn_auto sends exactly those to
+    extract_turn)."""
     from sparkocr.fixtures import turns_pandas
 
     df = turns_pandas(seed=3, n_convs=40)
@@ -134,8 +136,8 @@ def test_routing_mode_document_turns_match():
 
 def test_fixture_markup_turns_all_match():
     """Every markup-bearing row of the benchmark transcript fixture is
-    stage-3 eligible and byte-identical (the shape the SCALING_NOTES
-    residue analysis names)."""
+    routed to the general machine and byte-identical (the shape the
+    SCALING_NOTES residue analysis names)."""
     from sparkocr.fixtures import turns_pandas
 
     df = turns_pandas(seed=3, n_convs=40)
@@ -176,7 +178,7 @@ def test_randomized_markup_against_per_turn(seed=23, n=600):
 
 
 def test_multiline_plain_turns_match_and_take_the_fast_path():
-    """Stage 2: newline-bearing plain turns run the flat machine —
+    """Plain machine: newline-bearing plain turns run the flat machine —
     per-line detection, the verbatim transitive merge, multi-crop
     reassembly — and must be byte-identical to the per-turn path."""
     texts = [
@@ -204,7 +206,7 @@ def test_multiline_plain_turns_match_and_take_the_fast_path():
 
 
 def test_whale_multiline_turns_match():
-    """Stage 2 on whale turns: thousands of lines, one all-merging
+    """Plain machine on whale turns: thousands of lines, one all-merging
     block and a staircase (merge-resistant) shape — byte-identical and
     bounded (the per-line work is C-level string ops; the merge
     fixpoint is the reference's own algorithm, shared with the
@@ -327,14 +329,16 @@ def test_transcript_mix_shares_match_documented():
     benchmark fixture). A round-4 review found the multi-line figure
     had drifted to a conflated number; this keeps the documented mix
     honest and catches fixture-generator regressions."""
-    from sparkocr.fastbatch import _eligible, _eligible_multiline
+    from sparkocr.fastbatch import PLAIN, _route
     from sparkocr.fixtures import turns_pandas
 
     # the exact fixture the real-cluster transcript bench replicates
     df = turns_pandas(seed=3, n_convs=40)
     n = len(df)
-    s1 = sum(_eligible(t) for t in df["text"]) / n
-    s2 = sum(_eligible_multiline(t) for t in df["text"]) / n
+    plain = [t for t in df["text"] if _route(t) == PLAIN]
+    single = [t for t in plain if "\n" not in t and "\r" not in t]
+    s1 = len(single) / n                  # plain, one line
+    s2 = (len(plain) - len(single)) / n   # the rest of plain
     markup = sum(isinstance(t, str) and "<" in t for t in df["text"]) / n
     assert n == 1263  # 1263 x reps 800 = 1,010,400 turns in the notes
     assert 0.13 <= s1 <= 0.19, s1         # ~16% single-line chat

@@ -113,12 +113,12 @@ single_line_texts = st.lists(
 @settings(max_examples=200, deadline=None)
 @given(single_line_texts)
 def test_single_line_fast_path_matches_general_path(text):
-    """The single-line/no-markup detection fast path must be
-    byte-equivalent to the general cascade. Forcing the general path by
-    appending a newline (an empty second line contributes no box and,
-    with border ≤ 16, does not change the first line's clamps)."""
+    """The single-line case of fastbatch's plain machine must be
+    byte-identical to the per-turn general cascade (``extract_turn``),
+    boilerplate markers, padding and CJK included — and no such row may
+    silently fall back to the per-turn path (``min_eligible=1``)."""
+    from fastbatch_compare import assert_matches
+
     assert "\n" not in text and "<" not in text and "\x1b" not in text
     for cfg in (DEFAULT_CONFIG, FLAGSHIP_CONFIG):
-        fast = find_text_boxes(TurnGrid(text), cfg)
-        general = find_text_boxes(TurnGrid(text + "\n"), cfg)
-        assert fast == general, (text, fast, general)
+        assert_matches([text], cfg, min_eligible=1)

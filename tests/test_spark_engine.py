@@ -418,8 +418,8 @@ def test_stratified_sample_and_hash_split_deterministic(spark):
 
 
 def test_module_level_singleton_verbs(spark):
-    """engine.rs free-function parity: the 7 verbs as module functions
-    over the initialized singleton; uninitialized use raises."""
+    """engine.rs free-function parity: ``process_ocr`` as a module
+    function over the initialized singleton; uninitialized use raises."""
     import sparkocr.engine as eng_mod
 
     old = eng_mod._INSTANCE
@@ -429,18 +429,12 @@ def test_module_level_singleton_verbs(spark):
             eng_mod.process_ocr(spark.createDataFrame(
                 [("c", 0, "hi there friend")],
                 "conv_id string, turn_idx int, text string"))
-        eng_mod.initialize(spark)
+        inst = eng_mod.initialize(spark)
+        assert eng_mod.get_instance() is inst
         df = spark.createDataFrame(
             [("c", 0, "a plain prose sentence for the verbs")],
             "conv_id string, turn_idx int, text string")
         assert eng_mod.process_ocr(df).collect()[0]["n_blocks"] == 1
-        assert len(eng_mod.get_text_rects(df).collect()[0]["boxes"]) == 1
-        assert len(eng_mod.get_text_images(df).collect()[0]["crops"]) == 1
-        assert eng_mod.recognize_text(df).collect()[0]["recognized"]["text"]
-        assert eng_mod.process_ocr_efficient(df).collect()[0]["n_blocks"] == 1
-        assert len(eng_mod.get_text_images_efficient(df)
-                   .collect()[0]["crops"]) == 1
-        assert len(eng_mod.detect_text(df).collect()[0]["crops"]) == 1
     finally:
         eng_mod._INSTANCE = old
 
